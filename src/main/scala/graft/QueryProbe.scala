@@ -33,7 +33,6 @@ object QueryProbe {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(graft.plans.RangeJoinRewrite.SmallRightBytesKey, "65536")

@@ -1,6 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.internal.SQLConf
 
 /** Lineage-cut policy for the engine's iterative operators (PageRank,
   * min-label cluster propagation, k-means training).
@@ -23,12 +28,18 @@ import org.apache.spark.sql.DataFrame
   *
   * The knob is the session conf [[Reliability.CheckpointDirKey]]: unset
   * (the default) → executor-local cut; set to a directory → reliable
-  * cut through that directory. Both paths produce a `LogicalRDD` that
-  * preserves the physical plan's output partitioning, so the
-  * partitioning-reuse optimizations around these cuts (e.g. the
-  * pre-partitioned edge list in `Dedup.dedupClusters`) hold identically
-  * under either policy, and results are bit-for-bit the same — the
-  * reliable path is spec-gated on exactly that equality.
+  * cut through that directory. Results are bit-for-bit the same either
+  * way — the reliable path is spec-gated on exactly that equality.
+  *
+  * Partitioning contract: [[cut]] plans adaptively like any query and
+  * writes no session conf, so it is safe from concurrent
+  * [[Par.inParallel]] builders. A cut whose final plan is hash
+  * partitioned declares that partitioning on its `LogicalRDD`, so a
+  * downstream join or aggregation on the same key reads the blocks
+  * without a shuffle — under either policy. AQE never coalesces a
+  * `repartition(n, key)`, so that is how a caller asks for a keyed
+  * layout; a bare `repartition(key)` comes back coalesced and the cut
+  * declares no partitioning.
   */
 object Reliability {
 
@@ -47,115 +58,74 @@ object Reliability {
     * rule. */
   val CheckpointDirKey = "spark.graft.checkpoint.dir"
 
-  /** Session conf stamp: the base dir last applied to the context via
-    * `setCheckpointDir` — lets a session re-point the dir mid-life
-    * without minting a fresh UUID subdirectory on every cut. */
-  private val AppliedKey = "spark.graft.checkpoint.dir.applied"
-
   /** Materialize `df` and cut its lineage under the session's
-    * checkpoint policy (see object doc). Eager in both modes — the
-    * iterative callers all reuse the cut result at least twice per
-    * round, so deferred materialization only moves the cost. */
-  def cut(df: DataFrame): DataFrame = cut(df, eager = true)
-
-  /** [[cut]] of a plan whose OUTPUT PARTITIONING the caller needs
-    * downstream (a deliberate `repartition(joinKey)`, or an
-    * aggregation that rides one): materializes with AQE disabled for
-    * this one plan so the resulting `LogicalRDD` records the hash
-    * partitioning. With AQE on, `Dataset.checkpoint` reads the
-    * partitioning off the adaptive plan and records
-    * `UnknownPartitioning` — every downstream join keyed on the
-    * partitioning then silently re-shuffles the materialized table
-    * (r22 probe: each PageRank round re-shuffled the full undirected
-    * edge list, 10.35 MB/round at sf0.1, because of exactly this).
-    * The AQE flag is a session conf, so the flip is visible to other
-    * threads planning queries in the same moment — callers run from
-    * the driver's sequential query-construction path (the iterative
-    * operators), not from [[Par.inParallel]] builders.
+    * checkpoint policy (see object doc), keeping the final plan's hash
+    * partitioning.
     *
-    * `eager = false` defers the block write to the first action, like
-    * [[cutLazy]]; planning (where the partitioning is captured) still
-    * happens here under the disabled flag either way. */
-  def cutPartitioned(df: DataFrame, eager: Boolean = true): DataFrame = {
+    * `eager = false` defers the block write to the first action on the
+    * result, saving one job where the next step is a single total
+    * aggregation over the cut. Under AQE the cut still runs the plan's
+    * shuffle stages here, since planning the final stage needs them.
+    * Callers that fan the result into several actions keep the eager
+    * default so the materialization isn't attributed to an arbitrary
+    * first consumer. */
+  def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    // serialize concurrent flips on the same session: two interleaved
-    // set/restore pairs could otherwise restore the OTHER call's
-    // "false" and leave AQE off for the rest of the session
-    spark.synchronized {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try cut(df, eager)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
-  /** Eager [[cut]] plus the ACTUAL stored byte size of the
-    * materialized blocks, read back from the block manager after the
-    * write. This is ground truth where plan statistics are not: a
-    * post-join/post-aggregation subtree's `sizeInBytes` estimate is
-    * off by orders of magnitude, but the blocks just written have an
-    * exact size. `None` when the blocks are not in executor storage
-    * (the reliable-checkpoint-to-files policy) — callers fall back to
-    * the configured shuffle width. */
-  def cutSized(df: DataFrame): (DataFrame, Option[Long]) = {
-    val c = cut(df, eager = true)
-    val sc = df.sparkSession.sparkContext
-    val rddId = c.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }
-    val bytes = rddId.flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
-      .map(i => i.memSize + i.diskSize)
-    (c, bytes)
-  }
-
-  /** SCALE-ADAPTIVE partition count for a keyed materialization
-    * holding `bytes` of (deserialized) rows:
-    * `ceil(bytes / advisoryPartitionSizeInBytes)` clamped to
-    * `[1, spark.sql.shuffle.partitions]`. A deliberate
-    * `repartition(key)` that feeds [[cutPartitioned]] is planned with
-    * AQE off, so nothing coalesces it — a tiny table would otherwise
-    * be pinned at the full shuffle width and every downstream
-    * per-round join would pay mostly-empty tasks, while a constant
-    * small width would serialize the cluster-scale case. Deriving the
-    * width from the measured input size keeps both ends honest (the
-    * same arithmetic AQE coalescing applies, done statically). */
-  def keyedPartitions(spark: org.apache.spark.sql.SparkSession, bytes: Option[Long]): Int = {
-    val conf = spark.sessionState.conf
-    val max = conf.numShufflePartitions
-    bytes match {
-      case Some(b) =>
-        val adv = conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-        math.max(1L, math.min(max.toLong, (b + adv - 1) / math.max(1L, adv))).toInt
-      case None => max
-    }
-  }
-
-  /** [[cut]] deferred to the FIRST ACTION on the result: the blocks
-    * are written as a side effect of a job the caller was about to run
-    * anyway, saving one job submission per cut. Fits iterative loops
-    * whose next step is a total aggregation over the cut result
-    * (BPE's pair fold); callers that fan the result into several
-    * actions should keep the eager [[cut]] so the materialization
-    * isn't attributed to an arbitrary first consumer. */
-  def cutLazy(df: DataFrame): DataFrame = cut(df, eager = false)
-
-  private def cut(df: DataFrame, eager: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(CheckpointDirKey) match {
-      case Some(dir) if dir.nonEmpty =>
+    val c = spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty) match {
+      case Some(dir) =>
         val sc = spark.sparkContext
         // setCheckpointDir mints a fresh UUID subdirectory per call —
         // apply it once per configured base, not once per round
-        if (!spark.conf.getOption(AppliedKey).contains(dir)) {
+        val base = new Path(dir)
+        val qualified = base.getFileSystem(sc.hadoopConfiguration).makeQualified(base)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
           sc.setCheckpointDir(dir)
-          spark.conf.set(AppliedKey, dir)
-        }
         df.checkpoint(eager)
-      case _ => df.localCheckpoint(eager)
+      case None => df.localCheckpoint(eager)
+    }
+    // the adaptive wrapper reports UnknownPartitioning, so Spark's own
+    // LogicalRDD drops the layout; the final plan still knows it
+    val finalPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    (c.queryExecution.analyzed, finalPlan.outputPartitioning) match {
+      case (l: LogicalRDD, h: HashPartitioning) if h.references.subsetOf(l.outputSet) =>
+        // makeCopy appends the stats and constraints Spark recorded
+        GraftSqlBridge.ofRows(spark, l.makeCopy(Array(
+          l.output, l.rdd, h, l.outputOrdering, Boolean.box(l.isStreaming), l.stream)))
+      case _ => c
+    }
+  }
+
+  /** Partition count for a keyed repartition of `copies` times the
+    * rows of the cut `c`: `ceil(bytes / advisoryPartitionSizeInBytes)`
+    * clamped to `[2, spark.sql.shuffle.partitions]`. The floor is 2
+    * because `repartition(1, key)` plans as `SinglePartition`, which no
+    * join can co-partition with. The bytes are measured, not estimated
+    * — a post-join plan's `sizeInBytes` is off by orders of magnitude,
+    * but the blocks just written have an exact size: the executor-local
+    * blocks' stored (deserialized) size, or the reliable checkpoint
+    * files' length. Deserialized blocks run larger than the serialized
+    * shuffle bytes the advisory size is calibrated for, so the local
+    * policy can overshoot — the safe direction. Full shuffle width when
+    * neither is found. */
+  def keyedWidth(c: DataFrame, copies: Int = 1): Int = {
+    val conf = c.sparkSession.sessionState.conf
+    val max = conf.numShufflePartitions
+    val sc = c.sparkSession.sparkContext
+    val bytes = c.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.flatMap { rdd =>
+      sc.getRDDStorageInfo.find(_.id == rdd.id).map(i => i.memSize + i.diskSize)
+        .orElse(rdd.getCheckpointFile.map { f =>
+          val p = new Path(f)
+          p.getFileSystem(sc.hadoopConfiguration).getContentSummary(p).getLength
+        })
+    }
+    bytes match {
+      case Some(b) =>
+        val adv = math.max(1L, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        math.min(max.toLong, math.max(2L, (b * copies + adv - 1) / adv)).toInt
+      case None => max
     }
   }
 }

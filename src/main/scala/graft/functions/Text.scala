@@ -157,14 +157,4 @@ object Text {
       }
       .reduce((a, b) => a + b)
   }
-
-  def simhashSql(toksExpr: String): String = {
-    val h = Hashing.md5LongSql("t", 11)
-    val terms = (0 until simhashBits).map { i =>
-      s"(CASE WHEN 2*len(list_filter(__hs, h -> (h >> $i) & 1 = 1)) > len(__hs) THEN ${1L << i} ELSE 0 END)"
-    }
-    val sum = terms.mkString("(", " + ", ")")
-    // __hs inlined as a transformed list
-    sum.replace("__hs", s"list_transform($toksExpr, t -> $h)")
-  }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.{Par, Reliability}
 import graft.functions.{Hashing, Text, VectorExpressions}
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -127,19 +128,14 @@ object Dedup {
   def minhashLshFromShingles(sh: DataFrame, threshold: Double): DataFrame = {
     // band path: ids + band keys only ride the self-join shuffle;
     // signatures come from one explode + min-agg pass (map-side
-    // combine). The SIGNATURE table is cut once (r22): it feeds both
-    // sides of the band self-join, and without a cut the whole
-    // explode + 128-perm min aggregation executed once PER SIDE
-    // (LogicalRDD-rooted subtrees never canonicalize into a
-    // ReusedExchange). The cut is the plain AQE-on one and the band
-    // explode stays lazy on top — a measured r22 revision: cutting the
-    // BANDED table pre-repartitioned on the join key (cutPartitioned)
-    // planned the signature pass with AQE off and serialized it behind
-    // an extra band-sized materialization, a net loss at every scale
-    // tested, while the band explode itself is a cheap projection of
-    // the signature blocks. The self-join stays adaptive: AQE
-    // broadcasts the band table when it fits and shuffles only
-    // (id, band-key) pairs when it does not (§2.4/§3.1).
+    // combine). The SIGNATURE table is cut once: it feeds both sides
+    // of the band self-join, and without a cut the whole explode +
+    // 128-perm min aggregation executed once PER SIDE (LogicalRDD-rooted
+    // subtrees never canonicalize into a ReusedExchange). The band
+    // explode stays lazy on top — a cheap projection of the signature
+    // blocks — and the self-join stays adaptive: AQE broadcasts the
+    // band table when it fits and shuffles only (id, band-key) pairs
+    // when it does not.
     val banded = bandTable(Reliability.cut(minhashSignatures(sh)))
     val l = banded.select(col("bk").as("bk_a"), col("id").as("id_a"))
     val r = banded.select(col("bk").as("bk_b"), col("id").as("id_b"))
@@ -231,10 +227,8 @@ object Dedup {
     // production path reads the STORED artifact back instead, which is
     // the same materialization. The corpus-prep cut and the batch
     // shingle cut are INDEPENDENT eager materializations — overlap
-    // them (r22, guide §2.6, the s16/s17 pattern): submitted
-    // sequentially the second job idles the cluster through the
-    // first's tail. Both are plain AQE-on cuts, so there is no
-    // cutPartitioned conf-flip race across the two builder threads.
+    // them (the s16/s17 pattern): submitted sequentially the second job
+    // idles the cluster through the first's tail.
     val parts = Par.inParallel(2) { i =>
       if (i == 0) Reliability.cut(prepareDedupCorpus(corpus, idCol, textCol))
       else Reliability.cut(shingleTable(batch, idCol, textCol))
@@ -343,18 +337,13 @@ object Dedup {
     * in disguise at corpus scale). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
     require(maxHamming <= simhashChunks - 1, "4-chunk pigeonhole guarantees recall only for hamming <= 3")
-    // the SKETCH table is cut once (r22): the banded view feeds both
-    // sides of the chunk self-join, and without a cut the
+    // the SKETCH table is cut once: the banded view feeds both sides
+    // of the chunk self-join, and without a cut the
     // tokenize+md5+bit-counter aggregation ran once PER SIDE from the
-    // corpus scan. The cut is the plain AQE-on one — (id, simhash) is
-    // one narrow row per doc — and the 4-chunk band explode stays lazy
-    // on top (a cheap projection of the sketch blocks, per side). A
-    // measured r22 revision: cutting the BANDED view pre-repartitioned
-    // on the join key (cutPartitioned) planned the sketch pass with AQE
-    // off and serialized it behind a band-sized materialization —
-    // slower than even the duplicated-sketch r21 shape. The self-join
-    // stays adaptive (broadcast when the sketch table fits, (id, key)
-    // shuffle when it does not).
+    // corpus scan. (id, simhash) is one narrow row per doc; the 4-chunk
+    // band explode stays lazy on top (a cheap projection of the sketch
+    // blocks, per side), and the self-join stays adaptive (broadcast
+    // when the sketch table fits, (id, key) shuffle when it does not).
     val sh = Reliability.cut(simhashTable(docs, idCol, textCol))
     val keyMask = (1L << simhashChunkBits) - 1
     val banded = sh.select(
@@ -459,19 +448,20 @@ object Dedup {
     // would otherwise run twice (same no-reuse reason as the withSh
     // cut). Materialized size is the prefix rows themselves,
     // ~(1−t)·corpus tokens — strictly smaller than the exploded token
-    // table the build already shuffles. Hash-partitioned on the join
-    // key (r22, cutPartitioned): the candidate self-join reads
-    // co-partitioned blocks on both sides instead of shuffling the
-    // prefix table twice. (Skew audit, r22: prefix-token multiplicity
-    // max 10 / median 7 on the sf0.1 corpus — rare-first ordering keeps
-    // the key histogram flat, no salting needed.)
-    val prefix = Reliability.cutPartitioned(ordered.select(
+    // table the build already shuffles. Cut keyed on the join key, so
+    // the candidate self-join reads co-partitioned blocks on both sides
+    // instead of shuffling the prefix table twice; the width is
+    // explicit because AQE never coalesces a repartition(n, key).
+    // (Rare-first ordering keeps the key histogram flat: prefix-token
+    // multiplicity max 10 / median 7 on the sf0.1 corpus.)
+    val n = withSh.sparkSession.sessionState.conf.numShufflePartitions
+    val prefix = Reliability.cut(ordered.select(
       col("id"), col("s"),
       posexplode(slice(
         col("arr"), lit(1),
         (col("s") - ceil(col("s") * lit(threshold)) + 1).cast("int"))))
       .select(col("id"), col("s"), col("pos"), col("col.tok").as("tok"))
-      .repartition(col("tok")))
+      .repartition(n, col("tok")))
     // required overlap, exact integers: J >= t  ⇔  o*(1e6+tE6) >= tE6*(sa+sb)
     val needed = lit(tE6) * (col("sa") + col("sb"))
     def bound(o: Column) = o * lit(1000000L + tE6)
@@ -545,11 +535,9 @@ object Dedup {
     // rationale, vector edition)
     val coded = Reliability.cut(Similarity.srpCode(emb, idCol, vecCol, numPlanes, dim))
     // banded stays a LAZY projection of the cut coded blocks: the band
-    // explode is a cheap per-side read, and (measured, r22) cutting it
-    // pre-repartitioned on the join key planned the band derivation
-    // with AQE off behind an extra materialization — a net loss. The
-    // chunk self-join stays adaptive (broadcast when the band table
-    // fits, (id, key) shuffle when it does not).
+    // explode is a cheap per-side read, and the chunk self-join stays
+    // adaptive (broadcast when the band table fits, (id, key) shuffle
+    // when it does not).
     val banded = srpBands(coded, numPlanes)
     val l = banded.select(col("ck").as("ck_a"), col("id").as("id_a"))
     val r = banded.select(col("ck").as("ck_b"), col("id").as("id_b"))
@@ -614,7 +602,7 @@ object Dedup {
     // (bands + verify) — cut once here; the production path reads the
     // STORED artifact back instead, which is the same materialization.
     // Corpus coding and batch coding are independent eager cuts —
-    // overlapped, same as the text twin (r22, guide §2.6).
+    // overlapped, same as the text twin.
     val parts = Par.inParallel(2) { i =>
       if (i == 0) Reliability.cut(prepareEmbeddingCorpus(corpus, idCol, vecCol, numPlanes, dim))
       else Reliability.cut(Similarity.srpCode(batch, idCol, vecCol, numPlanes, dim))
@@ -701,34 +689,26 @@ object Dedup {
     * (min reachable id) is independent of partitioning and iteration
     * order. */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // TWO-STEP materialization of the symmetric edge list (r22).
-    // Step 1: the pair pipeline (typically a full LSH build + exact
-    // verify) materializes under the normal ADAPTIVE planner — a
-    // cutPartitioned of the whole subtree would plan its joins with
-    // AQE off (static size estimates → sort-merge everywhere, no
-    // runtime coalescing; the r22 probe measured exactly that
-    // regression). Step 2: the symmetric union + hash-partition on the
-    // per-round join key is a cheap blocks→shuffle→blocks job, and
-    // cutPartitioned there records the partitioning on the LogicalRDD
-    // (the plain cut under AQE records UnknownPartitioning), so every
-    // round's edges⋈labels join reshuffles only the (small) label
-    // side — the edge set crosses the wire once, not once per round.
-    // The keyed width is derived from the MEASURED pair bytes
-    // ([[Reliability.keyedPartitions]]): the AQE-off repartition would
-    // otherwise pin a tiny edge list at the full shuffle width (every
-    // round paying mostly-empty tasks) or a constant small width would
-    // serialize the cluster-scale case. (Interleaved in-JVM A/B, r22:
-    // sized ≈ the r21 plain-cut shape at sf0.1 — within noise on
-    // d05/d08, faster on t07 — and a fixed-width variant without the
-    // sizing was the worst of the three on all four consumers.)
-    val spark = pairs.sparkSession
-    val (p, pBytes) = Reliability.cutSized(pairs.select(col("id_a"), col("id_b")))
-    val n = Reliability.keyedPartitions(spark, pBytes.map(_ * 2))
+    // The symmetric edge list is cut keyed on the per-round join key,
+    // so every round's edges⋈labels join reshuffles only the (small)
+    // label side — the edge set crosses the wire once, not once per
+    // round. It is built in two steps: the pair pipeline (typically a
+    // full LSH build + exact verify) is cut first, so its measured size
+    // sets the keyed width (a tiny edge list is not pinned at the full
+    // shuffle width, nor a cluster-scale one serialized at a small
+    // constant width); the symmetric union + keyed repartition is then
+    // a cheap blocks→shuffle→blocks job.
+    val p = Reliability.cut(pairs.select(col("id_a"), col("id_b")))
     val sym = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(n, col("dst"))
-      .transform(df => Reliability.cutPartitioned(df)) // computed once, reused every round
-    var labels = sym.select(col("src").as("id")).distinct().withColumn("label", col("id"))
+      .repartition(Reliability.keyedWidth(p, copies = 2), col("dst"))
+      .transform(Reliability.cut(_)) // computed once, reused every round
+    // sym is eager and p has no other consumer: release p's blocks now
+    // rather than when the ContextCleaner collects the unreferenced RDD
+    p.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd.unpersist(blocking = false) }
+    // the node set is sym's dst set (the list is symmetric), so the
+    // initial labels ride sym's dst partitioning with no exchange
+    var labels = sym.select(col("dst").as("id")).distinct().withColumn("label", col("id"))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -748,7 +728,7 @@ object Dedup {
         .observe(obs,
           coalesce(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)), lit(0L)).as("changed"))
         .select(col("id"), col("label"))
-        .transform(Reliability.cut)
+        .transform(Reliability.cut(_))
       converged = obs.get("changed").asInstanceOf[Long] == 0L
       labels = step
       i += 1
@@ -812,7 +792,7 @@ object Dedup {
     // corpus text scan runs once, not once per consumer
     val scored = clusters.select(col("doc_id"), col("canonical_id").as("cluster_id"))
       .join(metrics, "doc_id")
-      .transform(Reliability.cut)
+      .transform(Reliability.cut(_))
     // argmax(quality, n_tokens, -doc_id) per cluster as ONE combinable
     // aggregate: struct comparison is lexicographic, so maximizing the
     // negated id IS the min-id tie-break (ids are non-negative longs)

@@ -107,7 +107,7 @@ object GraphRank {
         when(bad, lit(null)).otherwise(greatest(col("src"), col("dst"))).as("b"))
       .distinct()
       .observe(obs, sum(when(col("a").isNull, 1L).otherwise(0L)).as("null_pairs"))
-      .transform(Reliability.cut)
+      .transform(Reliability.cut(_))
     val nullPairs = obs.get("null_pairs").asInstanceOf[Long]
     require(nullPairs == 0L,
       "GraphRank: edge endpoint is NULL (src or dst) — least/greatest would silently " +
@@ -115,31 +115,21 @@ object GraphRank {
     // a self-loop canonicalizes to (a, a): emitting its swap would
     // double it where the doubled-list distinct kept exactly one row.
     //
-    // The undirected view is materialized HASH-PARTITIONED ON THE
-    // PER-ROUND JOIN KEY (r22, the dedupClusters edge-list trick,
-    // guide §2.4): the probe showed each round's edges⋈scores join
-    // re-shuffling the full edge list (10.35 MB per round at sf0.1,
-    // ×iters) because the cut scores table's unknown stats rule out a
-    // broadcast and nothing pinned the edge partitioning. LogicalRDD
-    // preserves the physical partitioning, so with und cut on
-    // hashpartitioning(src) every round's join reshuffles only the
-    // (node-sized) score side — the edge list crosses the wire once,
-    // not once per round — and the degree aggregation below rides the
-    // same partitioning with no exchange at all.
-    val und = Reliability.cutPartitioned(
+    // The undirected view is cut hash-partitioned on the per-round join
+    // key, so every round's edges⋈scores⋈deg join shuffles no edge: the
+    // edge list crosses the wire once, not once per round. The width is
+    // explicit because AQE never coalesces a repartition(n, key).
+    val n = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val und = Reliability.cut(
       canon.select(col("a").as("src"), col("b").as("dst"))
         .union(canon.where(col("a") =!= col("b")).select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src")))
-    // degree aggregation rides und's src-partitioning (no exchange),
-    // and keeping the partitioning on the cut lets the per-round deg
-    // join skip its shuffle too
-    val deg = Reliability.cutPartitioned(und.groupBy("src").agg(count(lit(1)).as("deg")))
-    // (measured, r21: pre-joining deg into a materialized adjacency —
-    // the GraphX triplet layout — REGRESSED the bench: the 2|E|-row
-    // materialization costs more than the three per-round broadcast
-    // deg joins it replaces. Kept as-is; at cluster scale the deg join
-    // rides the same exchange as the scores join, so the per-round
-    // cost is one join pass, not an extra shuffle.)
+        .repartition(n, col("src")))
+    // the degree aggregation rides und's partitioning (no exchange), and
+    // the cut keeps it, so the per-round deg join needs no shuffle either
+    val deg = Reliability.cut(und.groupBy("src").agg(count(lit(1)).as("deg")))
+    // (deg is not pre-joined into a materialized adjacency: the
+    // 2|E|-row materialization costs more than the per-round deg joins
+    // it would replace — OPTIMIZATION_r21.md)
     // the node set IS deg's key set — every node in the undirected
     // view has degree >= 1 — so derive it as a narrow projection of
     // the materialized degree blocks instead of paying a second
@@ -175,19 +165,11 @@ object GraphRank {
           (lit(teleport) + expr(
             s"$dampE2 * (coalesce(inflow, 0L) div 100) + ($dampE2 * (coalesce(inflow, 0L) % 100)) div 100"))
             .as("score_e9"))
-        // LAZY cut, HASH-PARTITIONED ON THE ROUND JOIN KEY (r22, guide
-        // §2.4/§2.6): the materialization still rides round k+1's job
-        // (no extra action), and recording hash(node) on the cut makes
-        // the next round's und⋈scores⋈deg fully co-partitioned — zero
-        // join-side exchanges, planned statically. The message
-        // aggregation is already hash(dst)-partitioned, so the keyed
-        // repartition is alias-collapsed rather than a second
-        // node-sized shuffle. The cut input is an aggregation +
-        // projection (no joins), so the cutPartitioned AQE-off
-        // planning caveat does not bite. Interleaved in-JVM A/B vs the
-        // plain lazy cut: g01 3.05 → 2.63, g02 3.86 → 3.38 s median.
-        .transform(df =>
-          Reliability.cutPartitioned(df.repartition(col("node")), eager = false))
+        // lazy cut keyed on the round join key: the next round's
+        // und⋈scores⋈deg is fully co-partitioned, and the keyed
+        // repartition collapses into the message aggregation's own
+        // exchange rather than adding a second shuffle
+        .transform(df => Reliability.cut(df.repartition(n, col("node")), eager = false))
     }
     scores
   }
@@ -247,27 +229,25 @@ object GraphRank {
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"),
         col("w"))
       .groupBy("a", "b").agg(sum(col("w")).as("w"))
-      .transform(Reliability.cut)
+      .transform(Reliability.cut(_))
     failOnNullEndpoints(obs)
     val badW = obs.get("bad_w").asInstanceOf[Long]
     require(badW == 0L,
       s"pageRankWeighted: edge weight must be > 0 after long cast on $badW row(s); " +
         s"smallest offending cast value: ${Option(obs.get("min_bad_w")).getOrElse("NULL")}")
-    // undirected view cut hash-partitioned on the per-round join key —
-    // see the unweighted path's note (r22): edges cross the wire once,
-    // each round reshuffles only the score side, and the wsum
-    // aggregation below needs no exchange
-    val und = Reliability.cutPartitioned(
+    // undirected view cut keyed on the per-round join key — see the
+    // unweighted path: each round reshuffles only the score side, and
+    // the wsum aggregation below needs no exchange
+    val n = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val und = Reliability.cut(
       canon.select(col("a").as("src"), col("b").as("dst"),
           when(col("a") === col("b"), col("w") * 2).otherwise(col("w")).as("w"))
         .union(canon.where(col("a") =!= col("b")).select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .repartition(col("src")))
-    // wsum rides und's src-partitioning (no exchange, and the
-    // per-round ws join skips its shuffle); LAZY so the
-    // materialization rides the overflow check's own scalar fetch
-    // right below — one job instead of two (r22)
-    val ws = Reliability.cutPartitioned(
-      und.groupBy("src").agg(sum(col("w")).as("wsum")), eager = false)
+        .repartition(n, col("src")))
+    // wsum rides und's partitioning (no exchange, and the per-round ws
+    // join skips its shuffle); LAZY so the materialization rides the
+    // overflow check's own scalar fetch right below
+    val ws = Reliability.cut(und.groupBy("src").agg(sum(col("w")).as("wsum")), eager = false)
     // sqrt(2^63) bound on the split identity's W² intermediate; one
     // scalar fetch, which doubles as the cut's materializing action
     val wsumMax = ws.agg(coalesce(max(col("wsum")), lit(0L))).head.getLong(0)
@@ -299,8 +279,7 @@ object GraphRank {
             .as("score_e9"))
         // lazy keyed cut — rides the next round's job with the round
         // joins co-partitioned (see the unweighted loop's note)
-        .transform(df =>
-          Reliability.cutPartitioned(df.repartition(col("node")), eager = false))
+        .transform(df => Reliability.cut(df.repartition(n, col("node")), eager = false))
     }
     scores
   }

@@ -448,7 +448,7 @@ object Quantize {
     val rsubs = subvectors(residuals, "id", "rvec", nSub, subDim)
     var cents = rsubs.filter(col("id") < nCent)
       .select(col("id").as("cid"), col("sub"), col("sv").as("cv"))
-      .transform(graft.core.Reliability.cut)
+      .transform(graft.core.Reliability.cut(_))
     (0 until lloydIters).foreach { _ =>
       val assign = rsubs.join(broadcast(cents), Seq("sub"))
         .withColumn("dist", round(l2sq(col("sv"), col("cv")), 5))
@@ -465,7 +465,7 @@ object Quantize {
       cents = cents
         .join(means, Seq("sub", "cid"), "left")
         .select(col("sub"), col("cid"), coalesce(col("cv1"), col("cv")).as("cv"))
-        .transform(graft.core.Reliability.cut)
+        .transform(graft.core.Reliability.cut(_))
     }
     val codes = rsubs.join(broadcast(cents), Seq("sub"))
       .withColumn("dist", round(l2sq(col("sv"), col("cv")), 5))

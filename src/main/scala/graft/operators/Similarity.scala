@@ -92,7 +92,7 @@ object Similarity {
         (row_number().over(Window.orderBy(col("id"))) - 1).cast("long").as("cid"),
         col("vec").as("cvec"),
         col("nrm").as("cnrm"))
-      .transform(Reliability.cut)
+      .transform(Reliability.cut(_))
     (0 until iters).foreach { _ =>
       val assigned = base
         .crossJoin(broadcast(cents))
@@ -111,7 +111,7 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))), s => s.getField("m").cast("float")).as("cvec"))
       cents = mean
         .select(col("cid"), col("cvec"), VectorExpressions.normF(col("cvec")).as("cnrm"))
-        .transform(Reliability.cut)
+        .transform(Reliability.cut(_))
     }
     cents
   }

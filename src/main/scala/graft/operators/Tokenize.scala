@@ -98,7 +98,7 @@ object Tokenize {
       .where(!col("w").contains(RS) && !col("w").contains(US))
       .groupBy("w").agg(count(lit(1)).cast("long").as("f"))
       .select(col("f"), regexp_replace(col("w"), "(.)", s"$RS$$1$US").as("sym"))
-      .transform(Reliability.cutLazy)
+      .transform(Reliability.cut(_, eager = false))
 
     // aggregate a stream of signed pair-count contributions and ride
     // the NEXT round's argmax on the same materialization: min of
@@ -124,7 +124,7 @@ object Tokenize {
         .observe(obs,
           min(struct((-col("n")).as("neg_n"), col("lhs"), col("rhs"))).as("top"),
           count(lit(1)).as("rows"))
-        .transform(Reliability.cut)
+        .transform(Reliability.cut(_))
       (out, obs)
     }
 

@@ -50,14 +50,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"), sum("value").as("total"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total"))
 
-  /** Sliding 2-hour / 1-hour-step counts per event_type. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
   /** Session windows (30-minute gap) per user. The watermark delay is
     * the max tolerated event-time disorder: session state older than it
     * is finalized, so late-beyond-delay events are dropped rather than

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the `private[sql]` Column ↔ catalyst Expression converters
   * (`classic.ExpressionUtils`), needed to expose graft's custom codegen
@@ -19,4 +20,10 @@ object GraftSqlBridge {
     * the extensions config. */
   def registerFunction(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "internal")
+
+  /** A DataFrame over a hand-built logical plan — the `private[sql]`
+    * factory [[graft.core.Reliability.cut]] uses to rewrap checkpointed
+    * blocks with the partitioning they were written under. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

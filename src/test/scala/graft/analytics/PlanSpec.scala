@@ -2,7 +2,15 @@ package graft.analytics
 
 import graft.SparkSpec
 import graft.sources.LandingZone
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan audits — the properties that decide 100 TB behavior,
   * asserted on `.explain`-level plan text so a regression that silently
@@ -14,6 +22,44 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String = {
     val q = Queries.all.find(_.name == name).get
     q.fn(spark, sf0001).queryExecution.executedPlan.toString
+  }
+
+  /** Every physical node of `p`, descending into adaptive query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case o => o +: o.children.flatMap(nodes)
+  }
+
+  private def isExchange(p: SparkPlan) = p match {
+    case _: Exchange | _: ReusedExchangeExec => true
+    case _ => false
+  }
+
+  /** Does `p` read a scan with exactly these output columns through no
+    * exchange? */
+  private def readsDirectly(p: SparkPlan, cols: Seq[String]): Boolean = p match {
+    case s: RDDScanExec => s.output.map(_.name) == cols
+    case _: Exchange | _: ReusedExchangeExec | _: QueryStageExec => false
+    case o => o.children.exists(readsDirectly(_, cols))
+  }
+
+  /** The query executions of every lineage cut that running inventory
+    * query `name` makes, whose output columns are `cols`, in order. */
+  private def cutPlans(name: String, cols: Seq[String]): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f.toLowerCase.endsWith("checkpoint")) seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      Queries.all.find(_.name == name).get.fn(spark, sf0001).collect()
+      org.apache.spark.GraftSparkBridge.flushListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.filter(_.analyzed.output.map(_.name) == cols)
   }
 
   test("q02: range + IN filters are pushed into the parquet scan") {
@@ -56,8 +102,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d01 minhash: one fused signature aggregate, not 64 min-aggs") {
-    // r22: the signature pass materializes inside the banded
-    // cutPartitioned, so the final d01 frame only reads the cut — the
+    // the signature pass materializes inside its own cut, so the final
+    // d01 frame only reads the cut — the
     // fused-aggregate assertion checks the signature subplan at its
     // source (the exact plan the cut executes)
     val docs = graft.core.Tables.documents(spark, sf0001)
@@ -136,6 +182,47 @@ class PlanSpec extends SparkSpec {
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("g01: a PageRank round plans adaptively with one Exchange, the message aggregation") {
+    // the edge list and degrees are cut keyed on the round join key and
+    // each round's scores are cut keyed on the node, so the round's
+    // und⋈scores⋈deg joins read all three co-partitioned, with AQE on
+    val rounds = cutPlans("g01_graph_rank", Seq("node", "score_e9"))
+    assert(rounds.size == 3, s"expected one cut per round, got ${rounds.size}")
+    rounds.foreach { qe =>
+      val p = qe.executedPlan
+      assert(p.isInstanceOf[AdaptiveSparkPlanExec], s"the round planned with AQE off:\n$p")
+      val all = nodes(p)
+      val joins = all.collect { case j: BaseJoinExec => j }
+      assert(joins.size == 2, s"expected the edges⋈scores⋈deg joins:\n$p")
+      assert(!joins.flatMap(_.children).flatMap(nodes).exists(isExchange),
+        s"a join side was exchanged:\n$p")
+      all.filter(isExchange) match {
+        case Seq(s: ShuffleExchangeExec) =>
+          assert(nodes(s.child).exists(_.isInstanceOf[HashAggregateExec]), s"not the aggregation:\n$p")
+          s.outputPartitioning match {
+            case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "node")
+            case other => fail(s"message exchange is $other, not hash(node)")
+          }
+        case other => fail(s"expected exactly the message exchange, got ${other.size}:\n$p")
+      }
+    }
+  }
+
+  test("d05: a dedupClusters round never shuffles the edge side of its edges⋈labels join") {
+    // the symmetric edge list (src, dst) is cut keyed on dst, so the
+    // round's edges⋈labels join reads it in place; only the labels side
+    // may move
+    val rounds = cutPlans("d05_dedup_clusters", Seq("id", "label"))
+    assert(rounds.nonEmpty)
+    rounds.foreach { qe =>
+      val p = qe.executedPlan
+      val edgeJoins = nodes(p).collect {
+        case j: BaseJoinExec if j.children.exists(readsDirectly(_, Seq("src", "dst"))) => j
+      }
+      assert(edgeJoins.size == 1, s"the edge side was exchanged:\n$p")
     }
   }
 

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.LogicalRDD
+
 import graft.SparkSpec
 
 /** [[Par.widen]]'s width estimate must be FILE-AWARE (r22): the
@@ -13,6 +15,9 @@ import graft.SparkSpec
   * ([[Par.WidenMinGain]]×) before paying the exchange. The test
   * session runs local[4], so target = 4 and the gain gate means a
   * 1-file scan (4× deficit exactly) must already no-op.
+  *
+  * [[Reliability.keyedWidth]] sizes a keyed repartition from a cut's
+  * measured bytes under either checkpoint policy.
   */
 class ParSpec extends SparkSpec {
   import spark.implicits._
@@ -36,16 +41,49 @@ class ParSpec extends SparkSpec {
     assert(partsOf(w) == before, "widen must read the cut's actual block count, not byte stats")
   }
 
+  /** Run `body` with the AQE advisory partition size set to `bytes`. */
+  private def withAdvisory[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  // The next two cases keep the names of the helpers `keyedWidth`
+  // replaced; they check the same contracts through it.
   test("keyedPartitions derives width from measured bytes, clamped to the shuffle width") {
     val max = spark.sessionState.conf.numShufflePartitions
-    assert(Reliability.keyedPartitions(spark, None) == max)
-    assert(Reliability.keyedPartitions(spark, Some(1L)) == 1)
-    assert(Reliability.keyedPartitions(spark, Some(Long.MaxValue / 4)) == max)
+    val c = Reliability.cut((1 to 1000).toDF("x"))
+    // a few KB of blocks against the 64 MB advisory size: the floor of
+    // two, the narrowest width a keyed repartition keeps its hash layout
+    assert(Reliability.keyedWidth(c) == 2)
+    // one byte per partition: clamped to the shuffle width
+    assert(withAdvisory(1L)(Reliability.keyedWidth(c)) == max)
+    // nothing materialized to measure: the full shuffle width
+    assert(Reliability.keyedWidth((1 to 1000).toDF("x")) == max)
   }
 
   test("cutSized reports the stored size of executor-local blocks") {
-    val (c, bytes) = Reliability.cutSized((1 to 1000).toDF("x"))
+    val c = Reliability.cut((1 to 1000).toDF("x"))
     assert(c.count() == 1000)
+    val rdd = c.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+    assert(rdd.isDefined, "a cut must read from a LogicalRDD")
+    val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.get.id).map(i => i.memSize + i.diskSize)
     assert(bytes.exists(_ > 0L), s"expected measured block bytes, got $bytes")
+    // the measurement, not the full-width fallback, sizes the width
+    assert(Reliability.keyedWidth(c) < spark.sessionState.conf.numShufflePartitions)
+  }
+
+  test("keyedWidth measures the checkpoint files under the reliable policy") {
+    val max = spark.sessionState.conf.numShufflePartitions
+    val dir = Files.createTempDirectory("graft-keyed-width").toString
+    spark.conf.set(Reliability.CheckpointDirKey, dir)
+    try {
+      val c = Reliability.cut((1 to 1000).toDF("x"))
+      assert(Reliability.keyedWidth(c) == 2,
+        "the reliable cut's file length must size the width, not the full-width fallback")
+      assert(withAdvisory(1L)(Reliability.keyedWidth(c)) == max)
+    } finally spark.conf.unset(Reliability.CheckpointDirKey)
   }
 }

@@ -1,14 +1,23 @@
 package graft.core
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import graft.SparkSpec
 import graft.operators.{Dedup, GraphRank, Similarity}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.{col, udf}
 
 /** The reliable-checkpoint policy must be semantically invisible: every
   * iterative operator returns bit-identical results whether its lineage
   * cuts are executor-local (default) or written to the checkpoint
-  * directory (`spark.graft.checkpoint.dir` set). */
+  * directory (`spark.graft.checkpoint.dir` set). A keyed cut declares
+  * its hash partitioning under either policy, and writes no session
+  * conf that a concurrent planner could observe. */
 class ReliabilitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,4 +71,71 @@ class ReliabilitySpec extends SparkSpec {
       assert(written > 0, s"no checkpoint files under $dir")
     } finally spark.conf.unset(Reliability.CheckpointDirKey)
   }
+
+  test("repeated reliable cuts share one checkpoint subdirectory") {
+    val dir = Files.createTempDirectory("graft-ckpt-subdir")
+    spark.conf.set(Reliability.CheckpointDirKey, dir.toString)
+    try {
+      Reliability.cut(Seq(1, 2, 3).toDF("x")).collect()
+      Reliability.cut(Seq(4, 5, 6).toDF("x")).collect()
+      // setCheckpointDir mints a UUID subdir per call: once per base
+      val subdirs = Files.list(dir).filter(Files.isDirectory(_)).count()
+      assert(subdirs == 1, s"$subdirs checkpoint subdirectories under $dir")
+    } finally spark.conf.unset(Reliability.CheckpointDirKey)
+  }
+
+  private def declared(c: DataFrame) =
+    c.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.outputPartitioning }
+
+  test("a cut of repartition(n, k) declares HashPartitioning(k, n) under either policy") {
+    def check(): Unit = {
+      val c = Reliability.cut((1L to 100L).toDF("k").repartition(3, col("k")))
+      declared(c) match {
+        case Some(HashPartitioning(Seq(a: Attribute), 3)) => assert(a.name == "k")
+        case other => fail(s"expected hashpartitioning(k, 3), got $other")
+      }
+      // and the declaration is used: an aggregation on k plans no exchange
+      val agg = c.groupBy("k").count()
+      assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
+        agg.queryExecution.executedPlan.toString)
+      assert(agg.count() == 100)
+    }
+    check()
+    withReliableDir(check())
+  }
+
+  test("a keyed cut leaves adaptive planning on for a concurrent Par.inParallel builder") {
+    import ReliabilitySpec.{cutRunning, planned}
+    cutRunning = new CountDownLatch(1)
+    planned = new CountDownLatch(1)
+    // the cut's tasks hold its job open until the other builder has
+    // planned, so the planning happens mid-job by construction
+    val hold = udf { (k: Long) =>
+      cutRunning.countDown()
+      planned.await(60, TimeUnit.SECONDS)
+      k
+    }
+    @volatile var joinPlan: SparkPlan = null
+    Par.inParallel(2) {
+      case 0 =>
+        Reliability.cut(spark.range(0, 100).select(hold(col("id")).as("k")).repartition(4, col("k")))
+      case _ =>
+        try {
+          assert(cutRunning.await(60, TimeUnit.SECONDS), "the keyed cut's job never started")
+          val j = spark.range(0, 10).toDF("k").join(spark.range(5, 15).toDF("k"), "k")
+          joinPlan = j.queryExecution.executedPlan
+          j
+        } finally planned.countDown()
+    }
+    assert(joinPlan.isInstanceOf[AdaptiveSparkPlanExec],
+      s"a join planned during a keyed cut lost AQE:\n$joinPlan")
+  }
+}
+
+object ReliabilitySpec {
+  // latches the cut's tasks reach through this object: executor-side
+  // closures are deserialized copies, but a static reference is shared
+  // in local mode
+  @volatile var cutRunning: CountDownLatch = new CountDownLatch(0)
+  @volatile var planned: CountDownLatch = new CountDownLatch(0)
 }

@@ -6,6 +6,7 @@
 # the whole round went unverified.
 #
 # Usage: tools/preflight.sh [--full]
+#   always:  no spark.sql.adaptive.* conf outside core/GraftSession.scala
 #   default: sbt compile + Test/compile   (~1 min, catches r6-class breaks)
 #   --full:  also runs the whole ScalaTest suite (~5 min)
 set -uo pipefail
@@ -14,6 +15,21 @@ cd "$(dirname "$0")/.."
 TASKS="compile; Test/compile"
 if [[ "${1:-}" == "--full" ]]; then
   TASKS="compile; Test/compile; test"
+fi
+
+# The engine plans adaptively everywhere: only the session factory
+# (core/GraftSession.scala) may set a spark.sql.adaptive.* conf. Naming
+# one in any other main source is how a session-wide AQE flip — read by
+# every concurrent planner on the session — comes back. Comment lines
+# are exempt.
+AQE_CONFS=$(grep -rn --include='*.scala' '"spark\.sql\.adaptive\.' src/main \
+  | grep -v '^src/main/scala/graft/core/GraftSession\.scala:' \
+  | grep -v -E '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)' || true)
+if [[ -n "$AQE_CONFS" ]]; then
+  echo "PREFLIGHT FAILED — spark.sql.adaptive.* conf outside core/GraftSession.scala:" >&2
+  echo "$AQE_CONFS" >&2
+  rm -f .preflight_ok
+  exit 1
 fi
 
 if sbt -batch "$TASKS" >/tmp/preflight.log 2>&1; then
