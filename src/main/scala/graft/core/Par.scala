@@ -13,31 +13,45 @@ import org.apache.spark.sql.DataFrame
   */
 object Par {
 
-  /** Evaluate `n` independent DataFrame builders concurrently and
-    * return their results in index order — the guide-§2.6 "overlap
-    * independent jobs" pattern for in-query compositions whose pieces
-    * each run eager work (an eager [[Reliability.cut]], a scalar
-    * fetch): submitted from one thread the jobs serialize, from a
-    * small pool the scheduler back-fills each job's tail with the
-    * next job's tasks. Builders MUST be independent (no shared mutable
-    * state); Spark job submission is thread-safe. */
-  def inParallel(n: Int)(build: Int => DataFrame): IndexedSeq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContextExecutorService, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // a dedicated fixed pool sized n (r22, advice): the builders BLOCK
-    // on Spark actions, and parking them on ExecutionContext.global
-    // would eat the shared ForkJoinPool's parallelism for any nested or
-    // wider use. The pool dies with this call; threads are daemons so
-    // an abandoned builder can never pin the JVM.
-    val pool: ExecutionContextExecutorService =
-      ExecutionContext.fromExecutorService(
-        java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, n),
-          (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t }))
+  /** Run `n` independent builders concurrently and return their
+    * results in index order — the guide-§2.6 "overlap independent
+    * jobs" pattern: for in-query compositions whose pieces each run
+    * eager work (an eager [[Reliability.cut]], a scalar fetch), and
+    * for the pipeline's two replica upserts. Submitted from one thread
+    * the jobs serialize; from a small pool the scheduler back-fills
+    * each job's tail with the next job's tasks. Builders MUST be
+    * independent (no shared mutable state); Spark job submission is
+    * thread-safe.
+    *
+    * Every builder has stopped when this returns or throws: a failure
+    * is rethrown only after ALL builders finished, the first failure
+    * (in index order) with the others attached as suppressed — a
+    * fail-fast rethrow would leave a sibling still writing (say, a
+    * replica swapping partitions) after the caller's cleanup ran.
+    *
+    * This is the engine's ONE thread-creating primitive
+    * (`tools/preflight.sh` rejects pools and threads elsewhere in main
+    * code): a fixed pool sized `n`, because the builders BLOCK on
+    * Spark actions and parking them on a shared pool would eat its
+    * parallelism. The pool dies with this call, so its threads inherit
+    * the caller's SparkContext local properties; they are daemons. */
+  def inParallel[T](n: Int)(build: Int => T): IndexedSeq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, n),
+      (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t })
     try {
-      implicit val ec: ExecutionContext = pool
-      val fs = (0 until n).map(i => Future(build(i)))
-      fs.map(Await.result(_, Duration.Inf))
+      val tasks = (0 until n).map(i => pool.submit(new Callable[T] { def call(): T = build(i) }))
+      val outcomes = tasks.map { t =>
+        try Right(t.get())
+        catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      val failures = outcomes.collect { case Left(e) => e }
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.collect { case Right(v) => v }
     } finally pool.shutdown()
   }
 

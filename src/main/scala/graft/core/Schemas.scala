@@ -84,7 +84,10 @@ object Schemas {
     StructField("status", StringType), // RUNNING | SUCCESS | FAILED
     StructField("start_time", StringType), // HH:mm:ss (helper.py:18-19)
     StructField("end_time", StringType),
-    StructField("config", StringType)
+    StructField("config", StringType),
+    // `<exception class>: <message>` on a FAILED run's finish row, NULL
+    // otherwise; last, so log files written before it read it as NULL
+    StructField("error", StringType)
   ))
 
   /** `date` dimension (`create_date.sql:1-10`). */

@@ -4,7 +4,7 @@ import graft.core.Schemas
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** The pipeline-run metadata table (`logs`) and its status state
   * machine RUNNING → SUCCESS | FAILED (ST6).
@@ -57,20 +57,22 @@ class RunLog(spark: SparkSession, path: String) {
     * (`db_postgres.py:51`, `crime_etl.py:429`). */
   def start(runId: String, loadDate: java.sql.Date, runType: String, mode: String, config: Seq[(String, String)]): Unit = {
     val base = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(runId, loadDate, runType, mode, "RUNNING", utcTime(), null, null))),
+      spark.sparkContext.parallelize(Seq(Row(runId, loadDate, runType, mode, "RUNNING", utcTime(), null, null, null))),
       Schemas.logs)
     append(base.withColumn("config", to_json(struct(config.map { case (k, v) => lit(v).as(k) }: _*))))
   }
 
   /** Finalize the row — `update_log` semantics: append a transition row
-    * carrying the resolved current values with the new status/end_time.
-    * The current-row read is a lazy filtered plan, and the write is one
-    * appended row — the table is never rewritten. */
-  def finish(runId: String, loadDate: java.sql.Date, status: String): Unit =
+    * carrying the resolved current values with the new status/end_time
+    * and `error` (the cause of a FAILED run; NULL clears an earlier
+    * one). The current-row read is a lazy filtered plan, and the write
+    * is one appended row — the table is never rewritten. */
+  def finish(runId: String, loadDate: java.sql.Date, status: String, error: Option[String] = None): Unit =
     append(read()
       .filter(col("run_id") === runId && col("load_date") === loadDate)
       .withColumn("status", lit(status))
-      .withColumn("end_time", lit(utcTime())))
+      .withColumn("end_time", lit(utcTime()))
+      .withColumn("error", lit(error.orNull).cast(StringType)))
 
   /** A1: high-water mark — max load_date with status in the given set. */
   def maxLoadDate(statuses: Seq[String]): Option[java.sql.Date] = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Data-test operators (A5) — the dbt `unique` / `not_null` schema
@@ -45,7 +45,16 @@ object DataChecks {
     * production ingest monitoring for free, where [[requireUnique]] /
     * [[requireNotNull]] each cost their own job. Metrics are computed
     * by accumulator on the executors as rows flow through; at 100 TB
-    * that is the difference between monitoring and a second scan.
+    * that is the difference between monitoring and a second scan. The
+    * pipeline's not-null gate rides this way on the one action that
+    * fills its shared batch's cache
+    * ([[graft.pipeline.Runner.loadReplicas]], gated by
+    * [[requireNoObservedNulls]]).
+    *
+    * Observe ABOVE a cache or cut, never beneath one: metrics arrive
+    * only when the action executes the observed plan itself, so an
+    * observation inside a cached plan whose blocks some other action
+    * filled is never delivered, and `obs.get` blocks waiting for it.
     *
     * Collected per column c: `nulls_c`; plus `n_rows`, and `min_c` /
     * `max_c` for the columns in `minMaxCols`. Read the result AFTER an
@@ -58,13 +67,24 @@ object DataChecks {
   def observed(
       df: DataFrame,
       nullCols: Seq[String],
-      minMaxCols: Seq[String] = Nil): (DataFrame, org.apache.spark.sql.Observation) = {
+      minMaxCols: Seq[String] = Nil): (DataFrame, Observation) = {
     require(nullCols.nonEmpty || minMaxCols.nonEmpty, "nothing to observe")
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val metrics =
       Seq(count(lit(1)).as("n_rows")) ++
         nullCols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c")) ++
         minMaxCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
+  }
+
+  /** The [[requireNotNull]] gate read off an [[observed]] frame's
+    * `nulls_c` metrics after its action ran — no job of its own. An
+    * empty frame's NULL sums read as zero. */
+  def requireNoObservedNulls(obs: Observation, cols: Seq[String]): Unit = {
+    val m = obs.get
+    val nulls = cols.map(c => c -> (m.get(s"nulls_$c") match { case Some(n: Long) => n; case _ => 0L }))
+      .filter(_._2 > 0L)
+    require(nulls.isEmpty,
+      s"not_null check failed on ${cols.mkString(",")}: ${nulls.map { case (c, n) => s"$n NULL $c" }.mkString("; ")}")
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Schemas
+import graft.core.{Par, Schemas}
 import graft.meta.{Checkpoint, CheckpointState, RunLog}
 import graft.operators.{DataChecks, SyncRepair, Transform, Upsert}
 import graft.sources.{ApiPageFetchError, ApiSimulator, Catalog, LandingZone}
@@ -23,6 +23,14 @@ import java.time.LocalDate
   * missed partitions (ST5). Thread/process boundaries of the DAG become
   * Spark job boundaries; branching is `if` on collected scalars (the
   * only `collect`s are scalar cursors — 100 TB posture).
+  *
+  * The two replicas (the reference's Postgres and Snowflake,
+  * `db_postgres.py:158-203`) share one transformed batch per load,
+  * read and checked once ([[loadReplicas]]), and then merge it
+  * independently and CONCURRENTLY, each against its own state; their
+  * run-log transitions are written two at a time too. Either
+  * replica's failure fails the run, but only after both have stopped,
+  * and both logs' finish rows carry its cause in `error`.
   *
   * Mode semantics (`crime_etl.py:94-228`):
   *  - FULL (no data yet): walk `[epochStart, loadDate]` in one-month
@@ -103,20 +111,20 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
         Seq((from.toString, loadDate))
     }
     val cfg = Seq("load_date" -> loadDate, "mode" -> mode, "epoch_start" -> epochStart)
-    logsA.start(runId, ld, "SCHEDULED", mode, cfg)
-    logsB.start(runId, ld, "SCHEDULED", mode, cfg)
+    val logs = IndexedSeq(logsA, logsB)
+    Par.inParallel(logs.size)(i => logs(i).start(runId, ld, "SCHEDULED", mode, cfg))
 
-    val status =
+    val failure =
       try {
         ranges.foreach { case (s0, e0) => extract(s0, e0) }
-        loadReplica(replicaA, Seq(loadDate))
-        loadReplica(replicaB, Seq(loadDate))
+        loadReplicas(Seq(replicaA, replicaB), Seq(loadDate))
         refreshCatalog()
-        "SUCCESS"
-      } catch { case _: Exception => "FAILED" }
+        None
+      } catch { case e: Exception => Some(e) }
+    val status = if (failure.isEmpty) "SUCCESS" else "FAILED"
+    val error = failure.map(e => s"${e.getClass.getName}: ${e.getMessage}")
 
-    logsA.finish(runId, ld, status)
-    logsB.finish(runId, ld, status)
+    Par.inParallel(logs.size)(i => logs(i).finish(runId, ld, status, error))
     status
   }
 
@@ -160,31 +168,46 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     LandingZone.write(src, landingRoot, loadDate)
   }
 
-  /** Landing → transform → idempotent keyed upsert into one replica,
-    * partition-scoped by occurrence year (only touched years rewrite),
-    * then the dbt-style data tests (A5): crime_id must be a unique,
-    * non-null key or the run fails. Checks are SCOPED — not-null runs
-    * on the incoming batch, uniqueness on the batch's partitions only
-    * (the upsert's cross-partition stale-key rewrite guarantees a key
-    * lives in at most one partition, so partition-local uniqueness ⇒
-    * global uniqueness) — two bounded jobs per load, not two
-    * full-table scans. */
-  def loadReplica(replicaPath: String, loadDates: Seq[String]): Unit = {
-    val raw = LandingZone.read(spark, landingRoot, loadDates)
-    val typed = Transform.crimeRecords(raw)
+  /** Landing → transform → idempotent keyed upsert into each of
+    * `replicaPaths`, partition-scoped by occurrence year (only touched
+    * years rewrite), with the dbt-style data tests (A5): crime_id must
+    * be a unique, non-null key or the load fails.
+    *
+    * The batch is SHARED: the landing zone is read and transformed once
+    * and cached, and one action fills the cache before any replica
+    * starts (forked first, every replica would compute the batch at
+    * once). The not-null test rides that action as an observation, so
+    * a NULL key fails the load before either replica is touched.
+    *
+    * Each replica then merges the batch INDEPENDENTLY — against its own
+    * state, never a merge computed from another replica, which a
+    * lagging replica replayed by [[syncRepair]] must not receive — and
+    * CONCURRENTLY ([[Par.inParallel]]), followed by its uniqueness test
+    * over every partition its upsert rewrote (including those that held
+    * stale versions of moved keys; the upsert's cross-partition
+    * stale-key rewrite keeps a key in at most one partition, so
+    * partition-local uniqueness ⇒ global uniqueness). Either replica's
+    * failure is rethrown only after every replica has stopped. */
+  def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Unit = {
+    val batch = Transform.crimeRecords(LandingZone.read(spark, landingRoot, loadDates))
       .withColumn("occ_year", year(col("date_of_occurrence")))
-      .cache() // reused by the check + the upsert's several passes
+      .cache()
     try {
-      DataChecks.requireNotNull(typed, Seq("crime_id"))
-      val touched = Upsert.upsertIntoParquet(
-        spark, replicaPath, typed,
-        keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
-      // uniqueness over EVERY partition this load rewrote — including
-      // those that held stale versions of moved keys
-      val touchedData = spark.read.parquet(replicaPath)
-        .filter(Upsert.partitionFilter("occ_year", touched))
-      DataChecks.requireUnique(touchedData, Seq("crime_id"))
-    } finally typed.unpersist()
+      // observed ABOVE the cache: an observation inside a cached plan
+      // is not delivered (see DataChecks.observed). The noop sink makes
+      // the fill one job; a count() would add an aggregation stage.
+      val (framed, nulls) = DataChecks.observed(batch, Seq("crime_id"))
+      framed.write.format("noop").mode("overwrite").save()
+      DataChecks.requireNoObservedNulls(nulls, Seq("crime_id"))
+      Par.inParallel(replicaPaths.size) { i =>
+        val touched = Upsert.upsertIntoParquet(
+          spark, replicaPaths(i), batch,
+          keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
+        DataChecks.requireUnique(
+          spark.read.parquet(replicaPaths(i)).filter(Upsert.partitionFilter("occ_year", touched)),
+          Seq("crime_id"))
+      }
+    } finally batch.unpersist()
   }
 
   /** validate_sync + sync_* (ST5): anti-join the replica logs, replay
@@ -196,7 +219,7 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
       val side = r.getString(1)
       val (log, replica) = if (side == "a") (logsA, replicaA) else (logsB, replicaB)
       log.start(runId, missedDate, "RECOVERY", "INCREMENT", Seq("recover" -> missedDate.toString))
-      loadReplica(replica, Seq(missedDate.toString))
+      loadReplicas(Seq(replica), Seq(missedDate.toString))
       log.finish(runId, missedDate, "SUCCESS")
     }
     if (diff.nonEmpty) refreshCatalog() // recovered partitions must be SQL-visible too

@@ -18,6 +18,9 @@ import graft.SparkSpec
   *
   * [[Reliability.keyedWidth]] sizes a keyed repartition from a cut's
   * measured bytes under either checkpoint policy.
+  *
+  * [[Par.inParallel]] returns only once every builder has stopped, so a
+  * failing builder can never leave a sibling running past the call.
   */
 class ParSpec extends SparkSpec {
   import spark.implicits._
@@ -85,5 +88,38 @@ class ParSpec extends SparkSpec {
         "the reliable cut's file length must size the width, not the full-width fallback")
       assert(withAdvisory(1L)(Reliability.keyedWidth(c)) == max)
     } finally spark.conf.unset(Reliability.CheckpointDirKey)
+  }
+
+  test("inParallel waits for every builder before it rethrows a failure") {
+    val thrown = new java.util.concurrent.CountDownLatch(1)
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Par.inParallel(2) {
+        case 0 =>
+          thrown.countDown()
+          throw new IllegalStateException("builder 0")
+        case _ =>
+          // starts only once builder 0 is failing, then is still busy
+          // when that failure reaches a fail-fast caller
+          thrown.await()
+          Thread.sleep(300)
+          finished.set(true)
+          spark.emptyDataFrame
+      }
+    }
+    assert(e.getMessage == "builder 0")
+    assert(finished.get, "inParallel rethrew while builder 1 was still running")
+  }
+
+  test("inParallel rethrows the first failure in index order, the others suppressed") {
+    val e = intercept[IllegalStateException] {
+      Par.inParallel(3) { i => if (i == 1) spark.emptyDataFrame else throw new IllegalStateException(s"builder $i") }
+    }
+    assert(e.getMessage == "builder 0")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("builder 2"))
+  }
+
+  test("inParallel returns any result type, in index order") {
+    assert(Par.inParallel(3)(i => i * 2) == IndexedSeq(0, 2, 4))
   }
 }

@@ -39,4 +39,17 @@ class DataChecksSpec extends SparkSpec {
     // and the written data is untouched by the observation
     assert(spark.read.parquet(out).count() == 4L)
   }
+
+  test("requireNoObservedNulls gates on the observed action's own null counts") {
+    val df = Seq((Some(1L), "a"), (None, "b")).toDF("k", "s")
+    val (framed, obs) = DataChecks.observed(df, nullCols = Seq("k", "s"))
+    assert(framed.count() == 2L)
+    DataChecks.requireNoObservedNulls(obs, Seq("s"))
+    val e = intercept[IllegalArgumentException](DataChecks.requireNoObservedNulls(obs, Seq("k", "s")))
+    assert(e.getMessage.contains("not_null check failed on k,s: 1 NULL k"))
+    // an empty frame's NULL sum is NULL, which reads as no violation
+    val (empty, eobs) = DataChecks.observed(df.filter($"k" > 5L), Seq("k"))
+    assert(empty.count() == 0L)
+    DataChecks.requireNoObservedNulls(eobs, Seq("k"))
+  }
 }

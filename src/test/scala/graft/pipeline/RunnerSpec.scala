@@ -1,14 +1,41 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
-import graft.operators.SyncRepair
+import graft.core.Schemas
+import graft.operators.{SyncRepair, Upsert}
 import graft.sources.{ApiSimulator, Catalog}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline smoke (SURVEY.md §5.5): simulated API → landing
   * zone → transform → dual-replica upsert → logs → checkpoint/resume →
-  * sync repair → catalog DDL → FULL/INCREMENT branching. */
+  * sync repair → catalog DDL → FULL/INCREMENT branching, plus the
+  * failure paths: a NULL key and a broken replica. */
 class RunnerSpec extends SparkSpec {
+
+  /** (relative path -> MD5 hex) of every file under `dir` — the
+    * byte-level identity of a stored table. */
+  private def digests(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(java.nio.file.Files.readAllBytes(f))
+      root.relativize(f).toString -> md5.map("%02x".format(_)).mkString
+    }.toMap
+    finally files.close()
+  }
+
+  /** A replica's rows as sorted strings: equal iff the tables are. */
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  /** (status, error) of `runId`'s resolved log row. */
+  private def logged(log: graft.meta.RunLog, runId: String): (String, String) = {
+    val r = log.read().filter(col("run_id") === runId).select("status", "error").first()
+    (r.getString(0), r.getString(1))
+  }
 
   test("full run lands, transforms and upserts into both replicas") {
     val dir = java.nio.file.Files.createTempDirectory("runner").toString
@@ -143,5 +170,64 @@ class RunnerSpec extends SparkSpec {
     bad.setProperty("runId", "x")
     val e = intercept[RuntimeException](ConfigMain.run(spark, bad))
     assert(e.getMessage.contains("workDir"))
+  }
+
+  test("a batch that lands a NULL crime_id fails the run and leaves both replicas untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2025-07-05", tablePrefix = "t7")
+    assert(r.run("run1", "2025-07-05", new ApiSimulator(totalRows = 100, pageSize = 50)) == "SUCCESS")
+    assert(logged(r.logsA, "run1") == (("SUCCESS", null)))
+    val stored = Seq(r.replicaA, r.replicaB).flatMap(p => Seq(p, Upsert.keymapPath(p)))
+    val before = stored.map(digests)
+    val idAt = Schemas.rawCrime.fieldIndex("id")
+    var nulled = false
+    val nullKey = new ApiSimulator(totalRows = 100, pageSize = 50) {
+      override def fetchPages(s: String, e: String, resume: Int): Iterator[(Int, Seq[Row])] =
+        super.fetchPages(s, e, resume).map { case (pg, rs) =>
+          if (nulled || rs.isEmpty) (pg, rs)
+          else { nulled = true; (pg, Row.fromSeq(rs.head.toSeq.updated(idAt, null)) +: rs.tail) }
+        }
+    }
+    assert(r.run("run2", "2025-07-12", nullKey) == "FAILED")
+    assert(nulled, "the batch never landed its NULL key")
+    assert(stored.map(digests) == before, "a replica changed although the batch failed its not-null test")
+    Seq(r.logsA, r.logsB).foreach { log =>
+      val (status, error) = logged(log, "run2")
+      assert(status == "FAILED")
+      assert(error.startsWith("java.lang.IllegalArgumentException:") &&
+        error.contains("not_null check failed on crime_id"), error)
+    }
+  }
+
+  test("one broken replica fails the run after both stop; a rerun converges") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2025-07-06", tablePrefix = "t8")
+    val api = new ApiSimulator(totalRows = 100, pageSize = 50)
+    assert(r.run("run1", "2025-07-06", api) == "SUCCESS")
+    // break only replica B's upsert: its keymap sidecar becomes a
+    // non-parquet file (the suite runs as root, so permission bits
+    // cannot inject the failure)
+    val keymapB = java.nio.file.Paths.get(Upsert.keymapPath(r.replicaB))
+    org.apache.commons.io.FileUtils.deleteDirectory(keymapB.toFile)
+    java.nio.file.Files.write(keymapB, "not parquet".getBytes("UTF-8"))
+    assert(r.run("run2", "2025-07-13", api) == "FAILED")
+    // replica A's concurrent upsert had finished, not just started
+    val listingA = digests(r.replicaA)
+    assert(!new java.io.File(dir, "warehouse_a").list().exists(_.contains("tmp-upsert")))
+    val causes = Seq(r.logsA, r.logsB).map(logged(_, "run2"))
+    causes.foreach { case (status, error) =>
+      assert(status == "FAILED")
+      assert(error != null && error.contains("crime.keymap"), error)
+    }
+    assert(causes.distinct.size == 1, "both logs must carry the one cause")
+    Thread.sleep(500)
+    assert(digests(r.replicaA) == listingA, "replica A kept changing after the run returned")
+    // remove the fault: B rebuilds its keymap from the table and the
+    // rerun of the same load date brings it level with A
+    java.nio.file.Files.delete(keymapB)
+    assert(r.run("run3", "2025-07-13", api) == "SUCCESS")
+    assert(logged(r.logsB, "run3") == (("SUCCESS", null)))
+    assert(rows(r.replicaA) == rows(r.replicaB))
+    assert(r.syncRepair("sync1") == 0)
   }
 }

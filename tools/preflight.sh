@@ -6,7 +6,8 @@
 # the whole round went unverified.
 #
 # Usage: tools/preflight.sh [--full]
-#   always:  no spark.sql.adaptive.* conf outside core/GraftSession.scala
+#   always:  no spark.sql.adaptive.* conf outside core/GraftSession.scala,
+#            no thread or pool created outside core/Par.scala
 #   default: sbt compile + Test/compile   (~1 min, catches r6-class breaks)
 #   --full:  also runs the whole ScalaTest suite (~5 min)
 set -uo pipefail
@@ -28,6 +29,21 @@ AQE_CONFS=$(grep -rn --include='*.scala' '"spark\.sql\.adaptive\.' src/main \
 if [[ -n "$AQE_CONFS" ]]; then
   echo "PREFLIGHT FAILED — spark.sql.adaptive.* conf outside core/GraftSession.scala:" >&2
   echo "$AQE_CONFS" >&2
+  rm -f .preflight_ok
+  exit 1
+fi
+
+# All concurrency goes through core/Par.scala's inParallel, the one
+# primitive that waits for every builder before it rethrows: a pool or
+# thread made anywhere else in main code can outlive the call that
+# started it (still writing after the caller cleaned up). Comment lines
+# are exempt.
+POOLS=$(grep -rn --include='*.scala' -E 'Executors\.|new Thread\(|ExecutionContext\.fromExecutor' src/main \
+  | grep -v '^src/main/scala/graft/core/Par\.scala:' \
+  | grep -v -E '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)' || true)
+if [[ -n "$POOLS" ]]; then
+  echo "PREFLIGHT FAILED — thread or pool created outside core/Par.scala:" >&2
+  echo "$POOLS" >&2
   rm -f .preflight_ok
   exit 1
 fi
